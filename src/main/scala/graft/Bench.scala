@@ -323,7 +323,8 @@ object Bench {
       .mkString("{", ",", "}")
     val sccA = sccActs.map { case (k, n) => s""""$k":$n""" }
       .mkString("{", ",", "}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the session's real width, as a JSON integer
+    val cpus = spark.sparkContext.defaultParallelism
     val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errors,"cc":$cc,"cc_actions":$ccActsJ,"pr_split":$pr,"scc_sweeps":$sccJ,"scc_actions":$sccA,"drift":$driftJ,"drift_mean":${msJ(driftMean)},"queries_norm":$qsNorm,"sf":"$sfDir"}"""
     // The COMPLETE payload goes to a file: the harness keeps only the last
     // ~2000 chars of output, and the full per-query map (~3 KB at 78

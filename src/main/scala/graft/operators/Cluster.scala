@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,15 @@ import graft.sources.IO
   *     linear; star contraction is logarithmic regardless of shape;
   *   - per round only (long, long) edges shuffle — never text, never
   *     signatures; volume never exceeds the input pair count;
-  *   - no driver-side graph: the driver sees two longs per round (the
-  *     convergence signature), nothing else.
+  *   - no driver-side graph in the loop: the driver sees two longs per
+  *     round (the convergence signature), nothing else.
+  *
+  * The loop is the fallback, not the default: [[connectedComponents]]
+  * first tries ONE ceiling-guarded collect ([[collectWithin]] at
+  * [[EdgeCollectCeiling]]) and, when the edge list fits, closes it with a
+  * driver union-find — one collect where the contraction pays one
+  * convergence job per round plus the jobs that build it. Only an edge
+  * list past the ceiling runs the distributed contraction below.
   *
   * Each round ends in a LAZY `localCheckpoint` materialized by the round's
   * star-forest check — checkpointing is mandatory for iterative
@@ -72,12 +79,39 @@ object Cluster {
 
   /** Connected components of the undirected graph given as an edge list.
     * Returns one (node, component) row per distinct node that appears in
-    * `edges`; `component` is the smallest node id in the component —
-    * deterministic, so downstream "keep the representative" policies are
-    * reproducible run-to-run.
+    * a non-self-loop, null-free edge of `edges`; `component` is the
+    * smallest node id in the component — deterministic, so downstream
+    * "keep the representative" policies are reproducible run-to-run.
+    *
+    * Edge lists of at most [[EdgeCollectCeiling]] rows close on the
+    * driver ([[driverComponentsOf]]); longer ones run the distributed
+    * star contraction ([[componentsWithRounds]]). Both return the same
+    * rows (spec-pinned); the driver path sets no session conf.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    componentsWithRounds(edges, srcCol, dstCol)._1
+    connectedComponents(edges, srcCol, dstCol, EdgeCollectCeiling)
+
+  /** [[connectedComponents]] at an explicit collect ceiling — 0 forces
+    * the star contraction (the degrade-path spec seam).
+    */
+  private[graft] def connectedComponents(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      ceiling: Long): DataFrame = {
+    // the contraction's own selection: self-loops and null endpoints
+    // (u =!= v is null there) carry no connectivity
+    val e = edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .where(col("u") =!= col("v"))
+    // past the ceiling the contraction re-evaluates `edges`: the bounded
+    // collect stops after ceiling + 1 rows, and checkpointing the input
+    // for the fallback would pin its blocks on the driver path too
+    collectWithin(e, ceiling) match {
+      case Some(rows) => driverComponentsOf(edges.sparkSession, rows)
+      case None => componentsWithRounds(e, "u", "v")._1
+    }
+  }
 
   /** [[connectedComponents]] plus the number of alternating rounds it took
     * to converge (test seam for the round-bound spec).
@@ -176,40 +210,41 @@ object Cluster {
     (comp, rounds)
   }
 
-  /** Edge ceiling for the DRIVER union-find closure of batch-bounded
-    * graphs ([[incrementalComponentsMd5]]): 4M (long, long) edges ≈
-    * 64 MB collected — the bm25-df-map contract (a bounded driver
-    * artifact with an in-plan fallback past the ceiling, never an
-    * unbounded data collect). The incremental path's edge set is
-    * batch-incident by construction (≤ batch × band-candidates), so a
-    * serve-path batch sits far below this; a batch large enough to cross
-    * it falls back to the distributed star contraction.
+  /** Row ceiling for the DRIVER closures — the union-find of
+    * [[connectedComponents]] and the Tarjan of `LinkGraph.sccComponents`
+    * (the bm25-df-map contract: a bounded driver artifact with the
+    * distributed loop as fallback past the ceiling, never an unbounded
+    * data collect). A collected two-long `Row` holds ~100 bytes of
+    * driver heap, and the collect itself peaks at 270-350 bytes per row
+    * (measured at 1M, 2M and 4M rows on Spark 4.1, local[4], JDK 17,
+    * -Xmx2g). 4M rows peak at 1.1 GB — over half a 2 GB driver that also
+    * hosts the local tasks' memory, before the closure's own state; 1M
+    * rows peak near 300 MB. Near-dup pair lists (178k edges at sf0.1),
+    * top-2 backbones and batch-bounded incremental edge sets sit far
+    * below it.
     */
-  private[graft] val EdgeCollectCeiling = 4000000L
+  private[graft] val EdgeCollectCeiling = 1000000L
 
-  /** Driver-side connected components over a SMALL edge frame: collect
-    * the (long, long) edges (caller guards the ceiling), union-find with
-    * min-id roots and path compression, return the same
-    * (node, component = smallest id in component) contract as
-    * [[connectedComponents]] — parity is spec-pinned. Replaces a 6-8-job
-    * contraction ladder with one collect and one tiny createDataFrame
-    * when the graph is batch-bounded; records (0 rounds, edge count) in
-    * [[lastRunStats]] so bench telemetry shows which path served.
+  /** The rows of `df` on the driver when there are at most `ceiling` of
+    * them, else None — ONE `limit(ceiling + 1)` collect: a row past the
+    * ceiling proves the fallback is needed without a separate count job
+    * (CollectLimit stops scanning once it holds ceiling + 1 rows).
     */
-  private[graft] def driverComponents(
-      spark: SparkSession,
-      edges: DataFrame): DataFrame =
-    driverComponentsOf(spark,
-      edges.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .collect())
+  private[graft] def collectWithin(df: DataFrame, ceiling: Long): Option[Array[Row]] = {
+    val rows = df.limit(math.toIntExact(ceiling + 1)).collect()
+    if (rows.length <= ceiling) Some(rows) else None
+  }
 
-  /** [[driverComponents]] over already-collected (long, long) edge rows —
-    * the seam the incremental path uses to fuse the ceiling guard into
-    * one limit-bounded collect.
+  /** Driver-side connected components over already-collected
+    * (long, long) edge rows ([[collectWithin]] bounds them): union-find
+    * with min-id roots and path compression, returning the same
+    * (node, component = smallest id in component) rows as the star
+    * contraction — parity is spec-pinned. Records (0 rounds, edge count)
+    * in [[lastRunStats]] so bench telemetry shows which path served.
     */
   private[graft] def driverComponentsOf(
       spark: SparkSession,
-      collected: Array[org.apache.spark.sql.Row]): DataFrame = {
+      collected: Array[Row]): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -335,13 +370,6 @@ object Cluster {
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component_id"))
   }
-
-  /** Near-dup clusters over the xxhash64 simhash pipeline (the fast
-    * library default; the md5 twin below is the oracle-checked shape).
-    */
-  def nearDupComponents(spark: SparkSession, sfDir: String): DataFrame =
-    documentComponents(spark, sfDir, Dedup.simHashNearDupPairsUnsorted(spark, sfDir))
-      .orderBy("doc_id")
 
   /** Near-dup clusters over the md5-prefix simhash pairs — every stage
     * (hashing, banding, Hamming verify, star contraction) replayed by the
@@ -600,22 +628,12 @@ object Cluster {
       .select(col("batch_id").as("doc_a"), col("other_id").as("doc_b"))
     // The supernode edge set is BATCH-BOUNDED (every edge is
     // batch-incident, volume ≤ batch × band-candidates), so below the
-    // collect ceiling the closure is a driver union-find over one
-    // checkpointed (long, long) frame — a model-artifact-sized collect
-    // like the bm25 df-map, with the distributed star contraction as the
-    // in-plan fallback past the ceiling. This removes the per-round
-    // checkpoint + convergence-check job ladder that dominated the serve
-    // path at bench scale (3.25 s for ~300 edges in r9).
-    val edges = bcEdges.unionByName(bbEdges).localCheckpoint()
-    // ceiling guard fused into the collect itself: fetch at most
-    // ceiling+1 rows — one row past the ceiling proves the fallback is
-    // needed without a separate count job (CollectLimit stops early)
-    val local = edges
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .limit(EdgeCollectCeiling.toInt + 1).collect()
-    val comp =
-      if (local.length <= EdgeCollectCeiling) driverComponentsOf(spark, local)
-      else connectedComponents(edges, "doc_a", "doc_b")
+    // collect ceiling connectedComponents closes it with a driver
+    // union-find — a model-artifact-sized collect like the bm25 df-map,
+    // with the distributed star contraction past the ceiling. The
+    // checkpoint keeps that fallback from re-scanning the corpus index.
+    val comp = connectedComponents(
+      bcEdges.unionByName(bbEdges).localCheckpoint(), "doc_a", "doc_b")
     val batchRows = batchDocs.select("doc_id")
       .join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),

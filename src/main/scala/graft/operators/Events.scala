@@ -391,7 +391,7 @@ object Events {
         (coalesce(col("w"), lit(0L)).cast("double") + lit(0.5)).as("wins05"))
       .localCheckpoint() // read every round
     // DRIVER-SIDE MM LOOP under a ceiling-gated collect (r19; the
-    // driverComponents / bm25-df-map convention): the fit runs on the
+    // driverComponentsOf / bm25-df-map convention): the fit runs on the
     // directed pair-count frame (≤ |items|² rows, catalog-bounded — the
     // same boundedness the broadcast-vector loop already relies on) and
     // the |items|-row stat frame. Collecting both and iterating on the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1110,9 +1110,16 @@ object LinkGraph {
     * the sweep loop converges to exactly one class per SCC, at which
     * point f = b = the SCC's min member id, the emitted `scc_id`.
     *
-    * Scale shape: state frames are |nodes| rows of three longs — the
-    * rank-vector shape, never edge-volume; the distinct edge pairs
-    * checkpoint once and every propagation round is one edges⋈labels
+    * Path selection: a backbone of at most [[Cluster.EdgeCollectCeiling]]
+    * edge + node rows is collected ONCE ([[Cluster.collectWithin]]) and
+    * decomposed on the driver by an iterative Tarjan ([[driverScc]]) —
+    * one collect in place of the sweep loop's ~13 actions, and no
+    * session conf is set. Only a backbone past the ceiling runs the
+    * FW-BW loop ([[sccOver]]); both emit the same rows (spec-pinned).
+    *
+    * Scale shape of the loop: state frames are |nodes| rows of three
+    * longs — the rank-vector shape, never edge-volume; the distinct edge
+    * pairs checkpoint once and every propagation round is one edges⋈labels
     * join + a min aggregation (map-side combinable, exact on longs —
     * no float drift anywhere, which is why the exact-closure oracle
     * hash-matches). Convergence checks are 1-row/isEmpty collects, and
@@ -1120,34 +1127,163 @@ object LinkGraph {
     * (spec-asserted on a known nesting chain, the star-contraction
     * convention).
     */
-  def sccComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
-      // build/loop telemetry (the pr_split convention): materialize the
-      // two graph inputs HERE — inside the pinned loop width, so the
-      // checkpointed frames carry the loop's exchange width — and the
-      // wall divides into "checkpointed graph builds" vs "the nested
-      // FW-BW fixpoint", the split the bench payload reports for the
-      // board's slowest graph row
-      val tBuild = System.nanoTime()
-      val (edges, nodes) = transitionGraphStored(spark, sfDir)
-      // LAZY (r20): nn is materialized by sccOver's own nodes.count(),
-      // bb by the first sweep's e2 job — two fewer standalone driver
-      // roundtrips. Note the build/loop telemetry consequence: the
-      // backbone window now executes inside the loop's first job, so
-      // build_sec reads ≈ 0 and the loop wall absorbs the build.
-      val bb = backboneOf(edges).select("src", "dst")
-        .localCheckpoint(eager = false)
-      val nn = nodes.select("node").localCheckpoint(eager = false)
-      val buildSec = (System.nanoTime() - tBuild) / 1e9
-      val tLoop = System.nanoTime()
-      // sccOver's FW-BW loop is internally eager (every sweep ends in
-      // actions), so by return time the loop work is done — only the
-      // |nodes|-row presentation window/sort stays lazy, attributed to
-      // neither half. No extra materialization for the telemetry.
-      val out = sccOver(bb, nn, preMaterialized = true)
-      lastBuildStats = Some((buildSec, (System.nanoTime() - tLoop) / 1e9))
-      out
+  def sccComponents(spark: SparkSession, sfDir: String): DataFrame =
+    sccComponents(spark, sfDir, Cluster.EdgeCollectCeiling)
+
+  /** [[sccComponents]] at an explicit collect ceiling — 0 forces the
+    * FW-BW loop (the degrade-path spec seam).
+    */
+  private[graft] def sccComponents(
+      spark: SparkSession,
+      sfDir: String,
+      ceiling: Long): DataFrame = {
+    // build/loop telemetry (the pr_split convention): "build" is the
+    // graph inputs (the collect on the driver path), "loop" the
+    // decomposition. Priming the stored graph comes first: the loop
+    // width below reads the edge artifact's footers.
+    val tBuild = System.nanoTime()
+    val (edges, nodes) = transitionGraphStored(spark, sfDir)
+    val bb = backboneOf(edges).select("src", "dst")
+    driverScc(bb, nodes.select("node"), ceiling, tBuild).getOrElse {
+      LoopWidth.pinned(spark, storedEdgeRows(spark, sfDir)) {
+        // both inputs checkpoint HERE — inside the pinned loop width, so
+        // the checkpointed frames carry the loop's exchange width.
+        // LAZY (r20): nn is materialized by sccOver's own nodes.count(),
+        // bb by the first sweep's e2 job — two fewer standalone driver
+        // roundtrips. The backbone window therefore executes inside the
+        // loop's first job, so build_sec reads ≈ 0 and the loop wall
+        // absorbs the build.
+        val bbck = bb.localCheckpoint(eager = false)
+        val nn = nodes.select("node").localCheckpoint(eager = false)
+        val buildSec = (System.nanoTime() - tBuild) / 1e9
+        val tLoop = System.nanoTime()
+        // sccOver's FW-BW loop is internally eager (every sweep ends in
+        // actions), so by return time the loop work is done — only the
+        // |nodes|-row presentation window/sort stays lazy, attributed to
+        // neither half. No extra materialization for the telemetry.
+        val out = sccOver(bbck, nn, preMaterialized = true)
+        lastBuildStats = Some((buildSec, (System.nanoTime() - tLoop) / 1e9))
+        out
+      }
     }
+  }
+
+  /** SCCs of explicit (src, dst) edges over the `nodes` id universe,
+    * decomposed on the driver when edges + nodes fit `ceiling` rows; None
+    * past it. Rows match [[sccOver]]'s: (node, scc_id = min member,
+    * scc_size) for every non-null node, ordered by node. Like the loop's
+    * joins, it ignores edges with a null endpoint or an endpoint outside
+    * `nodes`; self-loops and duplicates change no SCC. Telemetry reads as
+    * a resolved run with 0 sweeps and one action (the collect).
+    */
+  private[graft] def driverScc(
+      edges: DataFrame,
+      nodes: DataFrame,
+      ceiling: Long,
+      tBuild: Long = System.nanoTime()): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    // ONE bounded collect for both halves: node ids ride as (node, null)
+    // rows beside the null-free edges
+    val rows = edges
+      .select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
+      .union(nodes.select(col("node").cast("long").as("a"),
+        lit(null).cast("long").as("b")))
+    Cluster.collectWithin(rows, ceiling).map { collected =>
+      val tLoop = System.nanoTime()
+      val ids = collected.iterator
+        .filter(r => r.isNullAt(1) && !r.isNullAt(0)).map(_.getLong(0))
+        .toArray.sorted.distinct
+      val (scc, size) = tarjanMinIndex(ids, collected)
+      val out = ids.indices.map(i => (ids(i), ids(scc(i)), size(scc(i)).toLong))
+      lastSccUnresolved = Some(0L)
+      lastSccSweeps = Some(0)
+      lastSccActions = Some(1)
+      lastBuildStats = Some(((tLoop - tBuild) / 1e9,
+        (System.nanoTime() - tLoop) / 1e9))
+      // already in node order: a LocalRelation keeps its row order, and
+      // an orderBy would add a range-partitioning job
+      spark.createDataFrame(out).toDF("node", "scc_id", "scc_size")
+    }
+  }
+
+  /** Iterative Tarjan over dense indices into the sorted, distinct `ids`
+    * (no recursion: a 1M-node path would overflow the JVM stack). Edge
+    * rows are the collected rows with a non-null second column; rows
+    * naming an id outside `ids` are skipped. Returns, per index, the
+    * index of its SCC's smallest member — the min id, because `ids` is
+    * sorted — and, per such root index, the SCC size.
+    */
+  private def tarjanMinIndex(
+      ids: Array[Long],
+      collected: Array[Row]): (Array[Int], Array[Int]) = {
+    val n = ids.length
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    // CSR adjacency over dense indices
+    val us = Array.newBuilder[Int]
+    val vs = Array.newBuilder[Int]
+    collected.foreach { r =>
+      if (!r.isNullAt(1)) {
+        val u = indexOf(r.getLong(0))
+        val v = indexOf(r.getLong(1))
+        if (u >= 0 && v >= 0 && u != v) { us += u; vs += v }
+      }
+    }
+    val (eu, ev) = (us.result(), vs.result())
+    val start = new Array[Int](n + 1)
+    eu.foreach(u => start(u + 1) += 1)
+    for (i <- 0 until n) start(i + 1) += start(i)
+    val adj = new Array[Int](eu.length)
+    val fill = start.clone()
+    for (k <- eu.indices) { adj(fill(eu(k))) = ev(k); fill(eu(k)) += 1 }
+
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    var sp = 0
+    // explicit DFS frames: the node and the next adjacency slot to scan
+    val frameNode = new Array[Int](n)
+    val frameEdge = new Array[Int](n)
+    var fp = 0
+    val scc = new Array[Int](n)
+    val size = new Array[Int](n)
+    var counter = 0
+    def enter(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      frameNode(fp) = v; frameEdge(fp) = start(v); fp += 1
+    }
+    for (root <- 0 until n if index(root) < 0) {
+      enter(root)
+      while (fp > 0) {
+        val v = frameNode(fp - 1)
+        val e = frameEdge(fp - 1)
+        if (e < start(v + 1)) {
+          frameEdge(fp - 1) = e + 1
+          val w = adj(e)
+          if (index(w) < 0) enter(w)
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          fp -= 1
+          if (low(v) == index(v)) {
+            // v roots an SCC: its members sit above it on the stack
+            var lo = sp - 1
+            while (stack(lo) != v) lo -= 1
+            var m = v
+            for (k <- lo until sp) m = math.min(m, stack(k))
+            for (k <- lo until sp) { scc(stack(k)) = m; onStack(stack(k)) = false }
+            size(m) = sp - lo
+            sp = lo
+          }
+          if (fp > 0) {
+            val u = frameNode(fp - 1)
+            low(u) = math.min(low(u), low(v))
+          }
+        }
+      }
+    }
+    (scc, size)
   }
 
   /** CONDENSATION of the backbone: the DAG whose vertices are the SCCs
@@ -1301,10 +1437,13 @@ object LinkGraph {
   }
 
   /** FW-BW splitting over explicit (src, dst) distinct directed edges —
-    * the synthetic-graph test seam. Label frames are |nodes|-row and
-    * broadcast onto the edge side below [[BroadcastNodeCeiling]] (the
-    * PageRank rank-vector convention — edges never shuffle inside the
-    * loop); past it the joins run unhinted on the co-partitioned frames.
+    * the path [[sccComponents]] takes for a backbone past
+    * [[Cluster.EdgeCollectCeiling]] (below it, [[driverScc]] emits the
+    * same rows), and the synthetic-graph test seam. Label frames are
+    * |nodes|-row and broadcast onto the edge side below
+    * [[BroadcastNodeCeiling]] (the PageRank rank-vector convention —
+    * edges never shuffle inside the loop); past it the joins run
+    * unhinted on the co-partitioned frames.
     */
   private[graft] def sccOver(
       edges0: DataFrame,
@@ -1376,10 +1515,13 @@ object LinkGraph {
         .where(col("sf") === col("tf") && col("sb") === col("tb"))
         .select("src", "dst")
       // Below the broadcast ceiling e2's checkpoint is LAZY: the
-      // fixpoint's round-1 certificate is the job that materializes it
-      // (e2 is cached-edges ⋈ two broadcast label projections — cheap
-      // map-side work, and the only consumer before the cache fills is
-      // that one job). Past the ceiling the joins shuffle, so the eager
+      // fixpoint's round-1 certificate is the job that materializes it.
+      // That job scans e2 TWICE before the cache fills — sccStep's
+      // forward and backward relaxation halves each join it — so round 1
+      // computes e2 twice: one extra pass of cached-edges ⋈ two
+      // broadcast label projections, map-side only, O(|backbone|) rows
+      // per sweep, against the standalone roundtrip an eager checkpoint
+      // would cost. Past the ceiling the joins shuffle, so the eager
       // materialization stays — recomputing a shuffle per consumer
       // would cost more than the roundtrip it saves.
       val e2ck =

@@ -11,9 +11,18 @@ class ClusterSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def components(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Cluster.connectedComponents(edges.toDF("s", "t"), "s", "t")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** Components through BOTH closures — the driver union-find that
+    * serves below the collect ceiling and the star contraction forced by
+    * ceiling 0 — which must agree; the adversaries below pin both. */
+  private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def run(ceiling: Long): Map[Long, Long] =
+      Cluster.connectedComponents(edges.toDF("s", "t"), "s", "t", ceiling)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val contracted = run(0L)
+    assert(run(Cluster.EdgeCollectCeiling) == contracted,
+      s"driver/distributed closure drift on $edges")
+    contracted
+  }
 
   /** Driver-side union-find ground truth for small graphs. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -114,9 +123,13 @@ class ClusterSpec extends SparkTestBase {
       }
     graphs.foreach { edges =>
       val df = edges.toDF("doc_a", "doc_b")
-      val drv = Cluster.driverComponents(spark, df)
+      // connectedComponents serves these from the driver; the star
+      // contraction runs on the same frame through componentsWithRounds
+      val drv = Cluster.connectedComponents(df, "doc_a", "doc_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Cluster.connectedComponents(df, "doc_a", "doc_b")
+      assert(Cluster.lastRunStats.exists(_._1 == 0),
+        "below the ceiling connectedComponents must take the driver path")
+      val dist = Cluster.componentsWithRounds(df, "doc_a", "doc_b")._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(drv == dist, s"driver/distributed closure drift on $edges")
     }
@@ -138,9 +151,13 @@ class ClusterSpec extends SparkTestBase {
     // near-dup graphs are clique-ish, so the contraction (after the
     // small-star pre-shrink) must close in a couple of rounds — a jump
     // past this bound is a convergence regression, not data drift
+    // the contraction runs on the winnow pair graph itself:
+    // winnowComponentsMd5 serves this graph from the driver, below the
+    // collect ceiling
     Cluster.lastRunStats = None
-    Cluster.winnowComponentsMd5(spark, Sf).write
-      .format("noop").mode("overwrite").save()
+    Cluster.componentsWithRounds(
+        Dedup.winnowPairsStoredUnsorted(spark, Sf), "doc_a", "doc_b")._1
+      .write.format("noop").mode("overwrite").save()
     val (rounds, _) = Cluster.lastRunStats.getOrElse(
       fail("winnow components must record contraction telemetry"))
     assert(rounds <= 3, s"winnow component contraction took $rounds rounds")
